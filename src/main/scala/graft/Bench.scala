@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 object Bench {
   /** Forces FULL evaluation of every output row via the no-op sink.
     * `count()` is NOT a valid evaluation driver for a benchmark that is
@@ -15,23 +15,11 @@ object Bench {
     df.write.format("noop").mode("overwrite").save()
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = GraftSession.create(_
-      // sf0.1 inputs are sub-100MB: most shuffles carry a few MB, so let
-      // AQE coalesce them down to size (1-2 partitions) instead of
-      // preserving parallelism — fewer tasks per stage is the main lever
-      // against Spark's fixed per-task submission floor on tiny queries.
-      // At cluster scale the same configs are harmless: 100TB shuffles
-      // blow straight past the advisory size and keep full parallelism.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1m")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "256k")
-      // local mode has no data locality to wait for; the 3s default can
-      // stall tiny stages behind a phantom locality preference
-      .config("spark.locality.wait", "0ms"))
+    val spark = GraftSession.create(GraftSession.benchProfile)
     // the FIXED-INPUT set reads the reference 514-game sample, not the sf
     // dir — excluded so bench numbers reflect sf scaling only. ONE
     // canonical set (SparkEntry.fixedInputQueries, r13 ADVICE) shared
-    // with StageCount and published in the bench JSON for
+    // with Inspect and published in the bench JSON for
     // tools/bench_oracle.py. Sorted-name execution
     // order: deterministic run-to-run (a Map's hash order is not), and it
     // fixes WHICH query pays any shared-subtree build cost (the dedup
@@ -72,21 +60,10 @@ object Bench {
     // JSON line so host/session drift is diagnosable from the artifact
     // alone — the stage count is structural (same plans → same count), so
     // seconds-per-stage separates "the host was slow" from "a query grew
-    // stages". Listener events are async; the post-pass sleep lets the bus
-    // drain before the count is read.
-    val stageCount = new java.util.concurrent.atomic.AtomicInteger(0)
-    val stageListener = new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        stageCount.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(stageListener)
-    val p1 = timedPass()
-    val p2 = timedPass()
-    Thread.sleep(500)
-    val timedStages = stageCount.get()
-    spark.sparkContext.removeSparkListener(stageListener)
+    // stages"
+    val census = new StageCensus(spark.sparkContext)
+    val ((p1, p2), timedCensus) = census.measure((timedPass(), timedPass()))
+    census.close()
     val results = p1.map { case (k, v) => k -> math.min(v, p2(k)) }
     def f(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
     // fixed-input queries (they read the reference sample, not the sf dir)
@@ -147,7 +124,7 @@ object Bench {
         .map { case (k, _) => s"\"" + k + "\":-1.000" } ++
       top.sortBy(_._1).map { case (k, v) => s"\"" + k + "\":" + fq(v) })
       .mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":${f(total)},"unit":"sec","n_failed":${failed.size},"queries":$topJson,"floor_queries":{"n":${floor.size},"sum":${f(floor.map(_._2).sum)}},"stages":$timedStages,"sf":"$sfLabel","passes":2,"eval":"noop","full":${if (fullWritten) "\"" + fullOut + "\"" else "null"}}""")
+    println(s"""{"metric":"total","value":${f(total)},"unit":"sec","n_failed":${failed.size},"queries":$topJson,"floor_queries":{"n":${floor.size},"sum":${f(floor.map(_._2).sum)}},"stages":${timedCensus.stages},"cpus":${spark.sparkContext.defaultParallelism},"sf":"$sfLabel","passes":2,"eval":"noop","full":${if (fullWritten) "\"" + fullOut + "\"" else "null"}}""")
     spark.stop()
   }
 }

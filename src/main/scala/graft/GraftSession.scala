@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Canonical session factory. Every entry point (Verify, Bench, TimeOne,
-  * demos, the shared test fixture) builds its session here, so the Graft
-  * planner extensions ([[graft.plans.PrefixJoinStrategy]] via
+  * Inspect, demos, the shared test fixture) builds its session here, so
+  * the Graft planner extensions ([[graft.plans.PrefixJoinStrategy]] via
   * [[graft.plans.GraftPlanExtensions]]) and the engine-parity configs
   * (UTC session timezone) can never be silently lost — a plain
   * `SparkSession.builder()` without the strategy would degrade prefix
@@ -61,4 +61,23 @@ object GraftSession {
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  /** The bench session profile, layered on [[create]]'s base by every
+    * timing entry point (`GraftSession.create(GraftSession.benchProfile)`).
+    * The defaults of [[create]] stay as they are, so tests and Verify plan
+    * without it.
+    */
+  val benchProfile: SparkSession.Builder => SparkSession.Builder = _
+    // sf0.1 inputs are sub-100MB: most shuffles carry a few MB, so let
+    // AQE coalesce them down to size (1-2 partitions) instead of
+    // preserving parallelism — fewer tasks per stage is the main lever
+    // against Spark's fixed per-task submission floor on tiny queries.
+    // At cluster scale the same configs are harmless: 100TB shuffles
+    // blow straight past the advisory size and keep full parallelism.
+    .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
+    .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1m")
+    .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "256k")
+    // local mode has no data locality to wait for; the 3s default can
+    // stall tiny stages behind a phantom locality preference
+    .config("spark.locality.wait", "0ms")
 }

@@ -1072,7 +1072,7 @@ object SparkEntry {
           // feeds each sketch exactly its own slice). The r12 shape's
           // groupBy(k) + 2-row fold paid an extra exchange + AQE stage
           // for the same numbers (r13 VERDICT #3: a6 is the largest
-          // non-floor-bound heavy; StageCount 7 → 6 stages).
+          // non-floor-bound heavy; stage census 7 → 6 stages).
           src.select(explode(array(
               struct(lit(0).as("k"), col("l_partkey").as("v")),
               struct(lit(1).as("k"), col("l_orderkey").as("v")))).as("kv"))
@@ -1310,7 +1310,7 @@ object SparkEntry {
   /** Queries whose inputs are the FIXED reference sample (the 514-game
     * chess JSON / openings CSV), not the sf-scaled parquet dir — excluded
     * from sf-scaled bench totals and the floor-model census. THE canonical
-    * set (r13 ADVICE): [[graft.Bench]] and [[graft.tools.StageCount]]
+    * set (r13 ADVICE): [[graft.Bench]] and [[graft.tools.Inspect]]
     * consume it, and Bench publishes it as `"fixed_input"` in the bench
     * JSON so `tools/bench_oracle.py` reads it from there instead of
     * hardcoding a copy. An explicit set, not a name-prefix filter:

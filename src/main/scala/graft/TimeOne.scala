@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev harness: time individual queries by name (min-of-2 after a warm
   * pass, same convention as [[Bench]]).
   *
@@ -12,19 +10,9 @@ import org.apache.spark.sql.SparkSession
 object TimeOne {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = GraftSession.create(_
-      .config("spark.sql.adaptive.enabled",
-        (sys.env.getOrElse("SPARK_GRAFT_NO_AQE", "0") != "1").toString)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1m")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "256k")
-      .config("spark.locality.wait", "0ms"))
+    val spark = GraftSession.create(GraftSession.benchProfile)
     val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
     val passes = sys.env.getOrElse("SPARK_GRAFT_PASSES", "2").toInt
-    // SPARK_GRAFT_NO_CLEAR=1 emulates a Bench pass: caches survive ACROSS
-    // queries (shared family subtrees are built once by the first query
-    // that needs them) and are dropped only between passes
-    val keepAcross = sys.env.getOrElse("SPARK_GRAFT_NO_CLEAR", "0") == "1"
     // SPARK_GRAFT_SMOKE=1: single cold evaluation per query, failures
     // CAUGHT and reported (not fatal to the run) — the mode for "does the
     // whole board survive at a scale we can't afford to min-of-N",
@@ -47,48 +35,31 @@ object TimeOne {
       spark.stop()
       return
     }
-    if (keepAcross) {
-      names.foreach(n => Bench.evaluate(SparkEntry.queries(n)(spark, sfDir))) // warm
+    val best = names.map { name =>
+      val fn = SparkEntry.queries(name)
+      Bench.evaluate(fn(spark, sfDir)) // warm
       spark.catalog.clearCache()
       val ts = (1 to passes).map { _ =>
-        val r = names.map { name =>
-          val t0 = System.nanoTime()
-          Bench.evaluate(SparkEntry.queries(name)(spark, sfDir))
-          name -> (System.nanoTime() - t0) / 1e9
-        }
+        val t0 = System.nanoTime()
+        Bench.evaluate(fn(spark, sfDir))
+        val t = (System.nanoTime() - t0) / 1e9
         spark.catalog.clearCache()
-        r
+        t
       }
-      val best = ts.transpose.map(col => col.head._1 -> col.map(_._2).min)
-      best.foreach { case (n, t) => println(f"TIME $n%-28s $t%.3f s (min-of-$passes%d, pass-shared)") }
-      println(f"TIME __pass_total__             ${best.map(_._2).sum}%.3f s")
-    } else {
-      val best = names.map { name =>
-        val fn = SparkEntry.queries(name)
-        Bench.evaluate(fn(spark, sfDir)) // warm
-        spark.catalog.clearCache()
-        val ts = (1 to passes).map { _ =>
-          val t0 = System.nanoTime()
-          Bench.evaluate(fn(spark, sfDir))
-          val t = (System.nanoTime() - t0) / 1e9
-          spark.catalog.clearCache()
-          t
-        }
-        println(f"TIME $name%-28s ${ts.min}%.3f s (min-of-$passes%d)")
-        name -> ts.min
-      }
-      // optional machine-readable dump (same {"queries": {...}} shape as
-      // Bench's full line) so the scale harness can pair this harness'
-      // steady-state convention — per-query warm back-to-back min-of-N,
-      // the same convention as the DuckDB side's min-of-3 — against the
-      // one-shot interleaved Bench numbers
-      sys.env.get("SPARK_GRAFT_JSON_OUT").foreach { out =>
-        def f(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
-        val qs = best.sortBy(_._1)
-          .map { case (k, v) => "\"" + k + "\":" + f(v) }.mkString("{", ",", "}")
-        java.nio.file.Files.writeString(java.nio.file.Paths.get(out),
-          s"""{"metric":"steady","unit":"sec","passes":$passes,"queries":$qs}""" + "\n")
-      }
+      println(f"TIME $name%-28s ${ts.min}%.3f s (min-of-$passes%d)")
+      name -> ts.min
+    }
+    // optional machine-readable dump (same {"queries": {...}} shape as
+    // Bench's full line) so the scale harness can pair this harness'
+    // steady-state convention — per-query warm back-to-back min-of-N,
+    // the same convention as the DuckDB side's min-of-3 — against the
+    // one-shot interleaved Bench numbers
+    sys.env.get("SPARK_GRAFT_JSON_OUT").foreach { out =>
+      def f(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
+      val qs = best.sortBy(_._1)
+        .map { case (k, v) => "\"" + k + "\":" + f(v) }.mkString("{", ",", "}")
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(out),
+        s"""{"metric":"steady","unit":"sec","passes":$passes,"queries":$qs}""" + "\n")
     }
     spark.stop()
   }

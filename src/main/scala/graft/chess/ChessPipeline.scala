@@ -1,7 +1,7 @@
 package graft.chess
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 
 /** End-to-end medallion pipeline: bronze JSON → silver parquet → gold star
   * schema, with the reference's incremental semantics (existence-probe
@@ -104,33 +104,34 @@ class ChessPipeline(spark: SparkSession, root: String, username: String,
       readGold("gold/dim_openings.parquet"),
       readGold("gold/dim_results.parquet"),
       readGold("gold/dim_time_control.parquet"))
-    if (!exists(factRel)) {
-      joined.write.mode(SaveMode.Overwrite).partitionBy("game_month")
-        .parquet(path(factRel))
-    } else {
-      val months = joined.select("game_month").distinct()
-        .collect().map(_.getString(0)).toSeq // one entry per batch month
-      val prevMonths = readGold(factRel)
-        .filter(col("game_month").isin(months: _*)) // partition-pruned scan
-        .select(joined.columns.map(col): _*)
-      val merged = GoldFact.merge(prevMonths, joined)
-      // stage the merged months (can't overwrite a path being read), then
-      // dynamic-overwrite replaces exactly those partitions
-      val tmp = path(factRel + ".merge-tmp")
-      merged.write.mode(SaveMode.Overwrite).parquet(tmp)
-      val staged = spark.read.parquet(tmp)
-      val prevMode = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try staged.write.mode(SaveMode.Overwrite).partitionBy("game_month")
-        .parquet(path(factRel))
-      finally {
-        prevMode match {
-          case Some(m) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", m)
-          case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-        }
-        val fs = new Path(tmp).getFileSystem(spark.sessionState.newHadoopConf())
-        fs.delete(new Path(tmp), true)
+    // the first batch merges into an empty history: the merge's
+    // latest-wins dedup is what keeps one row per game_url if a dim joins
+    // more than once (two ECO codes under one ECOUrl)
+    val prevMonths =
+      if (exists(factRel)) {
+        val months = joined.select("game_month").distinct()
+          .collect().map(_.getString(0)).toSeq // one entry per batch month
+        readGold(factRel)
+          .filter(col("game_month").isin(months: _*)) // partition-pruned scan
+          .select(joined.columns.map(col): _*)
+      } else spark.createDataFrame(java.util.List.of[Row](), joined.schema)
+    val merged = GoldFact.merge(prevMonths, joined)
+    // stage the merged months (can't overwrite a path being read), then
+    // dynamic-overwrite replaces exactly those partitions
+    val tmp = path(factRel + ".merge-tmp")
+    merged.write.mode(SaveMode.Overwrite).parquet(tmp)
+    val staged = spark.read.parquet(tmp)
+    val prevMode = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
+    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    try staged.write.mode(SaveMode.Overwrite).partitionBy("game_month")
+      .parquet(path(factRel))
+    finally {
+      prevMode match {
+        case Some(m) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", m)
+        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
       }
+      val fs = new Path(tmp).getFileSystem(spark.sessionState.newHadoopConf())
+      fs.delete(new Path(tmp), true)
     }
   }
 

@@ -1,5 +1,6 @@
 package org.apache.spark.sql
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** Bridge to `private[sql]` helpers so graft's custom Catalyst expressions
@@ -35,6 +36,13 @@ object GraftShims {
       case l: execution.LogicalRDD => Some(l.rdd.id)
       case _ => None
     }
+
+  /** Blocks until every listener event posted so far has been delivered
+    * (`listenerBus` is `private[spark]`). Events of a finished action are
+    * posted before the action returns, so counters read after this call
+    * hold all of them — no sleep-and-poll.
+    */
+  def drainListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 
   /** Catalyst's internal bloom-filter pair (the machinery behind runtime
     * row-level join filtering, not exposed through `functions._`):

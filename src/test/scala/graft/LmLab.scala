@@ -6,21 +6,17 @@ import org.apache.spark.sql.functions._
 import graft.operators.LanguageModel
 
 /** r15 lab: lm_cross_entropy variants, same-session, min-of-N both orders.
-  * v0 = shipped shape; v1 = c12 persisted (dedups the double bigram-count
-  * subtree the broadcast builds stop ReuseExchange from collapsing);
-  * v2 = fanned docs (repartition both roles to session width);
-  * v3 = v1 + v2.
+  * v0 = re-planned bigram counts; v1 = c12 persisted (dedups the double
+  * bigram-count subtree the broadcast builds stop ReuseExchange from
+  * collapsing); vG = the shipped gate; v2_fanned_persist = v1 over fanned
+  * docs (repartition both roles to session width).
   * Usage: SPARK_GRAFT_SF_DIR=... sbt "Test/runMain graft.LmLab [passes]"
   */
 object LmLab {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val passes = args.headOption.map(_.toInt).getOrElse(3)
-    val spark = GraftSession.create(_
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1m")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "256k")
-      .config("spark.locality.wait", "0ms"))
+    val spark = GraftSession.create(GraftSession.benchProfile)
 
     def docs: DataFrame = Tables.documents(spark, sfDir)
     def fanned: DataFrame =
@@ -57,7 +53,7 @@ object LmLab {
           smallBytes = 0L, persistCapBytes = Long.MaxValue)),
       "vG_shipped" -> (() =>
         LanguageModel.crossEntropy(docs.filter(col("lang") === "en"), docs)),
-      "v2_fanned" -> (() =>
+      "v2_fanned_persist" -> (() =>
         persisted(fanned.filter(col("lang") === "en"), fanned)))
     val keep = args.lift(1).map(_.split(",").toSet)
     val variants = all.filter { case (n, _) => keep.forall(_.contains(n)) }

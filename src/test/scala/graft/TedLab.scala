@@ -9,7 +9,7 @@ import graft.operators.TextAnalysis
   * assigned per-bucket triangle blocks via row_number over a bucket
   * window — which clusters every bucket onto ONE task before the explode,
   * so the hot bucket (x1000: "customer", 165k rows, 93% of all candidate
-  * pairs) generated its 212M exploded left rows on one core (Scratch:
+  * pairs) generated its 212M exploded left rows on one core (stage table:
   * 145 s of the 340 s total). Candidate (shipped r15): hash blocks over
   * broadcast bucket counts — block id computed in the scan stage at full
   * width, block count capped at 512 so hot-key replication is bounded
@@ -24,11 +24,7 @@ object TedLab {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/tmp/graft-x1000")
     val passes = args.headOption.map(_.toInt).getOrElse(2)
-    val spark = GraftSession.create(_
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1m")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "256k")
-      .config("spark.locality.wait", "0ms"))
+    val spark = GraftSession.create(GraftSession.benchProfile)
 
     def base(s: SparkSession): DataFrame = {
       val norm = TextAnalysis.normalizedText(substring(col("text"), 1, 128))

@@ -225,4 +225,33 @@ class ChessPipelineSpec extends AnyFunSuite with Matchers with SparkFixture {
     an[java.io.IOException] should be thrownBy
       dead.runMonth(2024, 1, ts("2024-02-01 00:00:00"))
   }
+
+  test("first batch: one fact row per game when one ECOUrl carries two ECO codes") {
+    // hermetic: three games written here, two sharing an ECOUrl under
+    // different ECO headers, so dim_openings holds two rows for that URL
+    def game(id: Int, eco: String, ecoUrl: String): String = {
+      val headers = Seq("Event" -> "Live Chess", "Site" -> "Chess.com",
+        "Date" -> "2024.01.05", "White" -> "Rhythmbear1", "Black" -> s"opp$id",
+        "Result" -> "1-0", "ECO" -> eco, "ECOUrl" -> ecoUrl,
+        "StartTime" -> "10:00:00", "EndDate" -> "2024.01.05", "EndTime" -> "10:10:00")
+      val pgn = headers.map { case (k, v) => s"""[$k \\"$v\\"]""" }.mkString("\\n") +
+        "\\n\\n1. e4 {[%clk 0:09:58]} 1... e5 {[%clk 0:09:57]} 2. Nf3 {[%clk 0:09:50]} 1-0"
+      s"""{"url":"https://www.chess.com/game/live/$id","pgn":"$pgn","time_control":"600",""" +
+        s""""end_time":1704449400,"rated":true,"time_class":"rapid","rules":"chess",""" +
+        s""""white":{"rating":1200,"result":"win","username":"Rhythmbear1"},""" +
+        s""""black":{"rating":1180,"result":"resigned","username":"opp$id"}}"""
+    }
+    val url = "https://www.chess.com/openings/Kings-Pawn-Opening-Kings-Knight-Variation"
+    val dir = java.nio.file.Files.createTempDirectory("chess-fanout").toString
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$dir/bronze"))
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/bronze/2024-01-games.json"),
+      Seq(game(1, "C40", url), game(2, "C44", url),
+        game(3, "B00", "https://www.chess.com/openings/Nimzowitsch-Defense"))
+        .mkString("[", ",\n", "]"))
+    val p = new ChessPipeline(spark, dir, "Rhythmbear1")
+    p.runMonth(2024, 1, ts("2024-02-01 00:00:00"))
+    p.dimOpenings.filter(col("pgn_eco_url") === url).count() shouldBe 2L
+    p.fact.count() shouldBe 3L
+    p.fact.select("game_url").distinct().count() shouldBe 3L
+  }
 }

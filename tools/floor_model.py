@@ -2,7 +2,7 @@
 """The sf0.1 floor model (r12 VERDICT #3): turn "the heavy subset is
 structurally floor-bound" from an argument into a checkable record.
 
-Joins the graft.tools.StageCount census (actually-submitted jobs/stages
+Joins the graft.tools.Inspect census (actually-submitted jobs/stages
 per query under the Bench session configs) against BENCH_ORACLE.json's
 paired numbers, CALIBRATES the per-stage floor from the floor-subset
 queries themselves (median spark_sec/stages over queries under the heavy
@@ -19,8 +19,8 @@ shave list. Output: FLOOR_MODEL.json (calibration + per-heavy-query
 table + the non-floor-bound list), referenced next to the heavy-subset
 table this model explains.
 
-  sbt "runMain graft.tools.StageCount" | grep '^{' > /tmp/stagecount.jsonl
-  python3 tools/floor_model.py --census /tmp/stagecount.jsonl \
+  sbt "runMain graft.tools.Inspect" | grep '^{' > /tmp/census.jsonl
+  python3 tools/floor_model.py --census /tmp/census.jsonl \
       --oracle BENCH_ORACLE.json --out FLOOR_MODEL.json
 """
 import argparse
@@ -88,7 +88,7 @@ def main():
                 "scheduling cost (amortized at scale; see the x1000 "
                 "board), below -> real work, the shave list"
                 % args.floor_bound,
-        "census_tool": "graft.tools.StageCount (actually-submitted "
+        "census_tool": "graft.tools.Inspect (actually-submitted "
                        "jobs/stages of one steady evaluation, Bench "
                        "session configs, AQE re-plans included)",
         "oracle_pairing_stamp": oracle.get("pairing", {}).get("stamp"),
